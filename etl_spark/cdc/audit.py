@@ -160,7 +160,7 @@ def audit_table(spark: SparkSession, table: SnapshotTable) -> dict:
     ok = all(
         c if isinstance(c, bool) else c.get("ok", True) for c in checks.values()
     )
-    from .maintain import _chain_len
+    from .maintain import _chain_len, bucket_file_stats
 
     chain_lens = [
         n for n in (_chain_len(e) for e in m["files"].values()) if n > 0
@@ -174,6 +174,13 @@ def audit_table(spark: SparkSession, table: SnapshotTable) -> dict:
         # table is carrying (read amplification = max_chain_len)
         "chained_buckets": len(chain_lens),
         "max_chain_len": max(chain_lens, default=0),
+        # CoW small-file growth: buckets carrying cold files gain a file
+        # per batch until compaction folds them (not listable while a
+        # bucket dir is missing)
+        "max_files_per_bucket": (
+            None if missing
+            else max(bucket_file_stats(table).values(), default=0)
+        ),
         "checks": checks,
     }
 

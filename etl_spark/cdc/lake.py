@@ -252,6 +252,12 @@ BLOOM_BITS_PER_KEY = 20
 BLOOM_K = 4
 BLOOM_MAX_ROWS = 80_000
 
+# stands in for ``manifest_bytes_written`` while the manifest that
+# embeds the figure is serialized (lake.SnapshotTable._publish); the NUL
+# bytes keep it from colliding with any real metric or column name
+_BYTES_PLACEHOLDER = "\0manifest_bytes_written\0"
+_BYTES_PLACEHOLDER_JSON = json.dumps(_BYTES_PLACEHOLDER)
+
 # bucket-dir-qualified file key: Spark part-file BASENAMES are not
 # unique across the bucket dirs of one write (same task number + job
 # UUID under two _bucket= dirs), so every bloom/pruning map is keyed by
@@ -301,10 +307,11 @@ def build_file_blooms(
 
     ``eligible`` restricts the build to those buckets (by key): callers
     skip SINGLE-file buckets — with one file per bucket the file IS the
-    bucket, so a bloom can't save a rewrite worth its build cost, and
-    skipping them makes the build FREE on whole-bucket-rewrite
-    workloads (the uniform headline replay). A skipped file simply has
-    no bloom and always counts as a hit (fail closed)."""
+    bucket, so a bloom can't save a rewrite worth its build cost. The
+    merge writes every bucket it rewrites whole as one file, so on
+    whole-bucket-rewrite workloads (the uniform headline replay) nothing
+    is eligible and the build runs no Spark job at all. A skipped file
+    simply has no bloom and always counts as a hit (fail closed)."""
     import base64
     import struct as _struct
 
@@ -313,13 +320,14 @@ def build_file_blooms(
     for b, v in harvest.items():
         if eligible is not None and b not in eligible:
             continue
+        n_before = len(file_ref)
         for ref in v["files"]:
             rows = int(ref[1] or 0)
             if rows <= 0 or rows > BLOOM_MAX_ROWS:
                 continue
             m_bits = 1 << max(10, (rows * BLOOM_BITS_PER_KEY - 1).bit_length())
             file_ref["/".join(ref[0].split("/")[-2:])] = (ref, m_bits)
-        if v["files"]:
+        if len(file_ref) > n_before:  # scan only dirs with a file to bloom
             paths.append(os.path.join(root, v["dir"]))
     if not file_ref:
         return
@@ -621,24 +629,27 @@ class SnapshotTable:
 
     def read_for_merge(
         self, manifest: dict, touched: list[int], keys_df: DataFrame
-    ) -> tuple[DataFrame, dict[str, list[list]], dict]:
+    ) -> tuple[tuple[DataFrame | None, DataFrame | None],
+               dict[str, list[list]], dict]:
         """The touched-bucket read for a CoW merge, pruned at FILE level
         (the Iceberg per-file manifest-entry analog): returns
-        ``(target_df, cold_refs, stats)``.
+        ``((whole_df, carried_df), cold_refs, stats)``.
 
         Within each touched bucket whose manifest entry carries per-file
         key-range stats, only the files whose conservative (repo, path)
-        interval can contain a batch key are read (``target_df``); the
-        rest are COLD — returned in ``cold_refs`` per bucket so the
-        commit carries them forward by reference instead of rewriting
-        them. This is what caps CoW write amplification when updates
+        interval can contain a batch key are read; the rest are COLD —
+        returned in ``cold_refs`` per bucket so the commit carries them
+        forward by reference instead of rewriting them. This is what caps CoW write amplification when updates
         concentrate in a small working set: merge cost scales with the
         update footprint in FILES, not in buckets. Soundness: a file's
         stored bounds are a superset of its true key interval
         (scan_written_footers), and every batch key hashes to exactly
         one bucket, so any existing row of a batch key lives in a HIT
         file — a cold file can never hold a row the merge should have
-        replaced or deleted.
+        replaced or deleted. The read comes back split by bucket:
+        ``whole_df`` covers the buckets that carry nothing cold,
+        ``carried_df`` the hit files of the buckets that do (each None
+        when empty).
 
         Buckets still in legacy dir form (no stats) are read whole, as
         are merge-on-read chains (their delta dirs may supersede any
@@ -653,7 +664,7 @@ class SnapshotTable:
         """
         files = manifest["files"]
         schema = self.table_schema([tuple(c) for c in manifest["dyn_schema"]])
-        plain_paths: list[str] = []   # stat-less refs: always read
+        plain_paths: list[tuple[str, str]] = []  # (bucket, path) to read
         heads: list[str] = []
         tails: list[str] = []
         cand: list[tuple] = []        # (bucket, seq, ref) with bounds
@@ -666,8 +677,8 @@ class SnapshotTable:
             heads.extend(os.path.join(self.root, r[0]) for r in hd)
             tails.extend(os.path.join(self.root, d) for d in tl)
             for i, r in enumerate(plain):
-                if r[2] is None:
-                    plain_paths.append(os.path.join(self.root, r[0]))
+                if r[2] is None:  # stat-less ref: always read
+                    plain_paths.append((k, os.path.join(self.root, r[0])))
                 else:
                     cand.append((int(b), i, r[2], r[3], r[4], r[5]))
                     refs_by_id[(int(b), i)] = r
@@ -678,8 +689,8 @@ class SnapshotTable:
         # workloads known to touch every file every batch, where the one
         # extra slim job per batch buys nothing)
         if cand and lvl == "0":
-            for ref in refs_by_id.values():
-                plain_paths.append(os.path.join(self.root, ref[0]))
+            for (b, _), ref in refs_by_id.items():
+                plain_paths.append((str(b), os.path.join(self.root, ref[0])))
             cand = []
         if cand:
             from .dedup import bucket_expr
@@ -736,7 +747,7 @@ class SnapshotTable:
             }
             for (b, i), ref in refs_by_id.items():
                 if (b, i) in hit_ids:
-                    plain_paths.append(os.path.join(self.root, ref[0]))
+                    plain_paths.append((str(b), os.path.join(self.root, ref[0])))
                     n_hit_pruned += 1
                 else:
                     cold.setdefault(str(b), []).append(ref)
@@ -747,18 +758,25 @@ class SnapshotTable:
                 int(r[1] or 0) for v in cold.values() for r in v
             ),
         }
+        # the merge writes whole and carried buckets with different
+        # layouts (merge._merge_and_commit); splitting here keeps each
+        # file in exactly one scan
+        whole = [p for b, p in plain_paths if b not in cold]
+        carried = [p for b, p in plain_paths if b in cold]
         parts: list[DataFrame] = []
-        if plain_paths:
-            parts.append(self.spark.read.schema(schema).parquet(*plain_paths))
+        if whole:
+            parts.append(self.spark.read.schema(schema).parquet(*whole))
         if heads or tails:
             parts.append(self._read_merged(heads, tails, schema))
-        if not parts:
-            return self.spark.createDataFrame([], schema), cold, stats
-        return (
-            parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1]),
-            cold,
-            stats,
+        whole_df = (
+            parts[0].unionByName(parts[1]) if len(parts) == 2
+            else parts[0] if parts else None
         )
+        carried_df = (
+            self.spark.read.schema(schema).parquet(*carried) if carried
+            else None
+        )
+        return (whole_df, carried_df), cold, stats
 
     def lookup(self, keys: list[tuple[str, str]]) -> DataFrame:
         """Point / small-batch key read: rows for the given (repo, path)
@@ -1022,13 +1040,17 @@ class SnapshotTable:
             raw_files[b] = {"ptr": ptr}
         metrics["manifest_shards_written"] = n_new
         metrics["manifest_shards_carried"] = n_carried
-        raw = dict(manifest, files=raw_files)
-        top_payload = json.dumps(raw, indent=1)
-        metrics["manifest_bytes_written"] = shard_bytes + len(top_payload)
-        # metrics may be embedded in the manifest (commit paths pass the
-        # same dict) — re-serialize so the committed copy carries the
-        # final counters
-        top_payload = json.dumps(raw, indent=1)
+        # the manifest embeds the byte count of itself: serialize once
+        # around a placeholder, then splice in the exact figure — the
+        # placeholder's bytes traded for the figure's own digits
+        metrics["manifest_bytes_written"] = _BYTES_PLACEHOLDER
+        top_payload = json.dumps(dict(manifest, files=raw_files,
+                                      metrics=metrics), indent=1)
+        rest = shard_bytes + len(top_payload) - len(_BYTES_PLACEHOLDER_JSON)
+        n_bytes = rest + len(str(rest + len(str(rest))))
+        metrics["manifest_bytes_written"] = n_bytes
+        top_payload = top_payload.replace(
+            _BYTES_PLACEHOLDER_JSON, str(n_bytes), 1)
         mpath = os.path.join(self.root, "manifests", f"v{version}.json")
         # exclusive: a concurrent writer that prepared against the same
         # parent (continuous ingest racing a background compact/rebucket)

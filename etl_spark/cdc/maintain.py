@@ -125,10 +125,12 @@ def compact(
     merge). ``last_lsn`` and the row set are unchanged — compaction is
     changelog-invisible and does not affect replay/resume.
 
-    Why it's needed: each merge's kept-branch preserves the target's
-    input splits, so a bucket rewritten across many batches accumulates
-    one file per carrying task — at micro-batch cadence the per-bucket
-    file count (and with it scan/open overhead) grows without bound.
+    Why it's needed: a merge rewrites a bucket whole as one file, but a
+    bucket that carries cold files keeps its hit files' input splits and
+    gains one upsert file per batch — at micro-batch cadence a sparse
+    working set's per-bucket file count (and with it scan/open
+    overhead) grows without bound. Merge-on-read chains grow the same
+    way, one delta dir per commit.
 
     ``max_chain_len`` is the merge-on-read compaction policy (the Hudi
     max-delta-commits analog): a chained bucket folds only when its

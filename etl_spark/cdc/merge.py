@@ -27,7 +27,8 @@ a full-outer join and a cached-updates design deliberately:
              -> keep unmatched rows ("carry"), drop matched
          UNION  winners(content semi-joined on winner lsns; the dedup
              groupBy is SKIPPED when step 1 proved the batch
-             duplicate-free), repartitioned by _bucket
+             duplicate-free), repartitioned by _bucket together with
+             the kept rows of buckets rewritten whole
          -> write partitionBy(_bucket)                     -- CoW dirs
     Then (driver-side, no job) per-bucket lineage from parquet footers.
 
@@ -35,9 +36,11 @@ Why this shape:
 - Spark cannot broadcast either side of a FULL OUTER join, so the naive
   ``target.join(upd, key, 'full_outer')`` would sort-merge-shuffle the
   whole touched partition set. The left join broadcasts the update
-  keyset instead: the target is read exactly once, streamed through a
-  BroadcastHashJoin, never shuffled. Too-big batches skip the hint and
-  AQE picks SMJ.
+  keyset instead: the target is read exactly once and streamed through
+  a BroadcastHashJoin. Only buckets rewritten whole shuffle their kept
+  rows (one repartition with the winners, so each lands as one file);
+  the hit files of buckets that carry cold files are never shuffled.
+  Too-big batches skip the hint and AQE picks SMJ.
 - The broadcast side is a SLIM dedup (key -> final op, ~60-byte rows);
   the full ~2KB-content dedup feeds only the union branch, so content
   crosses the wire exactly once. An earlier design persist()ed the full
@@ -645,22 +648,25 @@ def apply_prepared(
     # batch key — the rest carry forward by manifest reference
     # (file-level CoW, lake.read_for_merge)
     if full_rewrite:
-        target = table.read()
-        cold_refs, split_stats = {}, {}
+        whole = table.read() if table._bucket_dirs(manifest_prev) else None  # noqa: SLF001
+        targets, cold_refs, split_stats = (whole, None), {}, {}
     else:
-        target, cold_refs, split_stats = table.read_for_merge(
+        targets, cold_refs, split_stats = table.read_for_merge(
             manifest_prev, touched, slim
         )
-    target = evolve_table(target, changes, dyn_final)
+    targets = tuple(
+        None if t is None else evolve_table(t, changes, dyn_final)
+        for t in targets
+    )
 
     do_broadcast = n_keys <= BROADCAST_MAX_ROWS
     dup_free = m.duplicate_deliveries == 0
     try:
         return _merge_and_commit(
-            spark, table, m, slim, data, target, changes, dyn_final, touched,
-            full_rewrite, manifest_prev, do_broadcast, n_keys, ckpt, lsn_to,
-            prep.batch_id, salted_dedup, use_arrow_udfs, use_observations,
-            dup_free, policies, t0, cold_refs, split_stats,
+            spark, table, m, slim, data, targets, changes, dyn_final, touched,
+            full_rewrite, do_broadcast, ckpt, lsn_to, prep.batch_id,
+            salted_dedup, use_arrow_udfs, use_observations, dup_free,
+            policies, t0, cold_refs, split_stats,
         )
     finally:
         slim.unpersist()
@@ -700,49 +706,54 @@ def apply_batch(
 
 
 def _merge_and_commit(
-    spark, table, m, slim, data, target, changes, dyn_final, touched,
-    full_rewrite, manifest_prev, do_broadcast, n_keys, ckpt, lsn_to,
-    batch_id, salted_dedup, use_arrow_udfs, use_observations, dup_free,
-    policies, t0, cold_refs=None, split_stats=None,
+    spark, table, m, slim, data, targets, changes, dyn_final, touched,
+    full_rewrite, do_broadcast, ckpt, lsn_to, batch_id, salted_dedup,
+    use_arrow_udfs, use_observations, dup_free, policies, t0,
+    cold_refs=None, split_stats=None,
 ):
     cold_refs = cold_refs or {}
     split_stats = split_stats or {}
     bcol = bucket_expr(table.n_buckets)
-    data_cols = [c for c in target.columns]
+    data_cols = [f.name for f in table.base_fields] + [n for n, _ in dyn_final]
+    # ``targets`` = (whole buckets, hit files of carried buckets), each
+    # None when the read resolved no file (lake.read_for_merge)
+    parts = [t for t in targets if t is not None]
+    if not parts:
+        target = spark.createDataFrame([], table.table_schema(dyn_final))
+    else:
+        target = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     slim_keys = slim.select(*KEY_COLS, "op")
     if do_broadcast:
         slim_keys = F.broadcast(slim_keys)
-    j = target.join(slim_keys, on=KEY_COLS, how="left")
-    # "Known empty" must match what the target read actually resolved: a
-    # non-empty manifest whose TOUCHED buckets all happen to be new (or
-    # whose files were ALL pruned cold) still yields an empty
-    # LocalRelation (the plan shape under which Catalyst can elide
-    # CollectMetrics), so guard on the resolved read, not on manifest
-    # emptiness.
-    if full_rewrite:
-        target_known_empty = not table._bucket_dirs(manifest_prev)  # noqa: SLF001
-    else:
-        target_known_empty = bool(split_stats) and split_stats.get(
-            "files_hit", 0) == 0
-    # Observation guards: (a) on a provably-empty target plan Catalyst's
-    # empty-relation propagation can elide the CollectMetrics node;
-    # (b) under a Structured Streaming foreachBatch sink, CollectMetrics
-    # beneath a Union never reports (listener quirk) — the streaming
-    # front-end passes use_observations=False and the same counters are
-    # recomputed post-write from the cached slim + a pruned target scan.
-    tgt_obs = (
-        None
-        if (target_known_empty or not use_observations)
-        else Observation(f"merge_b{batch_id}")
-    )
-    if tgt_obs is not None:
-        j = j.observe(
-            tgt_obs,
-            F.sum(F.when(F.col("op").isNull(), 1).otherwise(0)).alias("carried"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deleted"),
-            F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("replaced"),
+    # One observation per target part, summed after the write: each part
+    # is scanned by exactly one branch, so every target row is counted
+    # once. Absent parts get none — an empty LocalRelation is the plan
+    # shape under which Catalyst's empty-relation propagation can elide
+    # the CollectMetrics node. Under a Structured Streaming foreachBatch
+    # sink, CollectMetrics beneath a Union never reports (listener
+    # quirk) — the streaming front-end passes use_observations=False and
+    # the same counters are recomputed post-write from the cached slim +
+    # a pruned target scan.
+    tgt_obs: list[Observation] = []
+    kept: list[DataFrame | None] = []
+    for side, part in zip(("whole", "carried"), targets):
+        if part is None:
+            kept.append(None)
+            continue
+        j = part.join(slim_keys, on=KEY_COLS, how="left")
+        if use_observations:
+            tgt_obs.append(Observation(f"merge_b{batch_id}_{side}"))
+            j = j.observe(
+                tgt_obs[-1],
+                F.sum(F.when(F.col("op").isNull(), 1).otherwise(0)).alias("carried"),
+                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deleted"),
+                F.sum(F.when(F.col("op").isin("I", "U"), 1).otherwise(0)).alias("replaced"),
+            )
+        kept.append(
+            j.where(F.col("op").isNull()).select(*data_cols).withColumn("_bucket", bcol)
         )
+    kept_whole, kept_carried = kept
 
     # Full-content winners by SEMI-JOIN REDUCTION: lsn is unique, so the
     # slim winners' lsn set (a few MB of longs, broadcast) filters the
@@ -786,26 +797,30 @@ def _merge_and_commit(
             F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_d"),
         )
 
-    # Both union branches arrive at the writer already bucket-aligned:
-    # - kept: target files are read per-bucket-dir, so each task holds
-    #   rows of exactly one bucket (broadcast join preserves that);
-    # - upserts: the dedup shuffle mixes every bucket into every task, so
-    #   ONE explicit repartition on _bucket (the small, deduped winner
-    #   set — not the raw batch) re-aligns it.
-    # partitionBy then writes O(n_buckets) files instead of
-    # O(tasks x n_buckets) — the small-file explosion is the write-side
+    # Write layout, per touched bucket:
+    # - WHOLE (nothing carried cold): its kept rows and its upserts share
+    #   ONE repartition on _bucket, so the bucket lands as exactly one
+    #   file. Rewriting the bucket in full costs no more bytes than
+    #   rewriting it file by file, and the file count stays at one
+    #   instead of growing by one per batch — which also keeps the
+    #   bucket out of the bloom build below (one file IS the bucket).
+    # - CARRIED (some files stay cold): hit files are rewritten without a
+    #   shuffle, one output file per reading task, and the upserts go to
+    #   one SEPARATE file. On sparse workloads that separate file is what
+    #   keeps the hot rows apart from the key-contiguous rolled files
+    #   compaction laid out: folding them back into a rolled file would
+    #   make every later batch rewrite that whole file again.
+    # The repartition carries only the upserts (the small, deduped winner
+    # set — not the raw batch) plus the whole buckets' kept rows;
+    # partitionBy then writes O(touched buckets) files instead of
+    # O(tasks x buckets) — the small-file explosion is the write-side
     # bottleneck at any scale.
-    kept = (
-        j.where(F.col("op").isNull())
-        .select(*data_cols)
-        .withColumn("_bucket", bucket_expr(table.n_buckets))
-    )
-    upserts = (
-        upd.where(F.col("op") != "D")
-        .select(*data_cols, "_bucket")
-        .repartition(max(len(touched), 1), "_bucket")
-    )
-    final = kept.unionByName(upserts)
+    final = upd.where(F.col("op") != "D").select(*data_cols, "_bucket")
+    if kept_whole is not None:
+        final = kept_whole.unionByName(final)
+    final = final.repartition(max(len(touched), 1), "_bucket")
+    if kept_carried is not None:
+        final = kept_carried.unionByName(final)
 
     version = table.version() + 1
     out_dir = table.new_data_dir(version)
@@ -836,13 +851,18 @@ def _merge_and_commit(
     n_d = int(ops.get("n_d") or 0)
     m.winners = n_iu + n_d
     m.conflicts_resolved = m.data_events - m.winners
-    tgt = None
-    if tgt_obs is not None:
+    tgt: dict | None = {}
+    for obs in tgt_obs:
         try:
-            tgt = tgt_obs.get or None
+            got = obs.get or None
         except Exception:
+            got = None
+        if got is None:
             tgt = None
-    if tgt is None and not target_known_empty:
+            break
+        for k, v in got.items():
+            tgt[k] = tgt.get(k, 0) + int(v or 0)
+    if parts and (tgt is None or not tgt_obs):
         # recompute the carry/match split from a column-pruned target
         # scan joined to the (cached, tiny) slim winners
         r = (
@@ -880,7 +900,9 @@ def _merge_and_commit(
         # insert-fanout pruning is metadata-only — lake.build_file_blooms.
         # Only multi-file buckets (counting carried cold refs): with one
         # file per bucket the file IS the bucket and a bloom buys
-        # nothing, so whole-bucket-rewrite workloads pay zero here.
+        # nothing. A bucket rewritten whole lands as one file (see the
+        # write layout above), so whole-bucket-rewrite workloads run no
+        # bloom job at all; only buckets carrying cold files pay here.
         from .lake import build_file_blooms
 
         eligible = {

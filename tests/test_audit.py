@@ -6,6 +6,7 @@ import os
 from etl_spark.cdc.audit import audit_table
 from etl_spark.cdc.gen import GenConfig, generate_events
 from etl_spark.cdc.lake import SnapshotTable
+from etl_spark.cdc.maintain import bucket_file_stats
 from etl_spark.cdc.runner import replay
 
 
@@ -21,6 +22,7 @@ def test_audit_clean_table_passes(spark, tmp_path):
     res = audit_table(spark, t)
     assert res["ok"], res
     assert res["keys"] == res["rows"]
+    assert res["max_files_per_bucket"] == max(bucket_file_stats(t).values())
 
 
 def test_audit_detects_checkpoint_violation(spark, tmp_path):

@@ -39,6 +39,25 @@ def replayed(spark, log, tmp_path):
     return t
 
 
+@pytest.fixture()
+def fragmented(spark, replayed):
+    """``replayed`` with small files laid out explicitly. A merge writes
+    a bucket it rewrites whole as one file, so the replay alone need not
+    leave any bucket with more than one; a rolled compaction splits
+    every bucket into key-contiguous files, and a one-key batch then
+    rewrites the hit file and adds an upsert file while the bucket's
+    other files carry cold — the growth compaction exists to fold."""
+    from etl_spark.cdc.merge_into import merge_into
+
+    compact(spark, replayed, max_files_per_bucket=0, target_file_rows=6)
+    key = replayed.read().orderBy("repo", "path").select("repo", "path").first()
+    merge_into(spark, replayed, spark.createDataFrame(
+        [(key["repo"], key["path"], "c2", "py", "x = 2")],
+        "repo string, path string, commit string, lang string, content string",
+    ))
+    return replayed
+
+
 def _state(table):
     return {
         (r["repo"], r["path"]): (r["content_sha256"], r["_last_lsn"])
@@ -270,20 +289,20 @@ def test_changelog_expired_snapshot_raises(spark, replayed):
         read_changelog(replayed, from_version=0).collect()
 
 
-def test_compact_reduces_files_keeps_state(spark, replayed):
-    before = _state(replayed)
-    v, ckpt = replayed.version(), replayed.last_lsn()
-    stats = bucket_file_stats(replayed)
+def test_compact_reduces_files_keeps_state(spark, fragmented):
+    before = _state(fragmented)
+    v, ckpt = fragmented.version(), fragmented.last_lsn()
+    stats = bucket_file_stats(fragmented)
     assert max(stats.values()) > 1, "fixture must accumulate small files"
-    m = compact(spark, replayed, max_files_per_bucket=1)
-    assert m["buckets_touched"] > 0 and replayed.version() == v + 1
-    assert replayed.last_lsn() == ckpt
-    assert max(bucket_file_stats(replayed).values()) == 1
-    assert _state(replayed) == before
+    m = compact(spark, fragmented, max_files_per_bucket=1)
+    assert m["buckets_touched"] > 0 and fragmented.version() == v + 1
+    assert fragmented.last_lsn() == ckpt
+    assert max(bucket_file_stats(fragmented).values()) == 1
+    assert _state(fragmented) == before
     # maintenance is changelog-invisible
-    assert read_changelog(replayed, from_version=v).count() == 0
+    assert read_changelog(fragmented, from_version=v).count() == 0
     # idempotent: nothing left to compact
-    assert compact(spark, replayed, max_files_per_bucket=1)["buckets_touched"] == 0
+    assert compact(spark, fragmented, max_files_per_bucket=1)["buckets_touched"] == 0
 
 
 def test_compact_rolled_files_are_key_disjoint(spark, replayed):

@@ -111,6 +111,44 @@ def test_untouched_bucket_shard_carried_byte_identical(spark, tmp_path):
     assert 0 < m.manifest_bytes < 64_000, m.to_dict()
 
 
+def _manifest_sizes(t):
+    base = os.path.join(t.root, "manifests")
+    return {
+        os.path.join(d, f): os.path.getsize(os.path.join(d, f))
+        for d, _, names in os.walk(base) for f in names
+    }
+
+
+def test_manifest_bytes_written_is_exact(spark, tmp_path):
+    """``manifest_bytes_written`` equals the on-disk bytes of the files
+    the commit added under ``manifests/`` — including the top manifest,
+    which embeds that very figure — for CoW, rollback and compaction
+    commits alike."""
+    from etl_spark.cdc.maintain import compact
+
+    t, n = _mk(spark, tmp_path / "lake")
+
+    def check(commit):
+        before = _manifest_sizes(t)
+        commit()
+        after = _manifest_sizes(t)
+        new = sum(sz for p, sz in after.items() if p not in before)
+        v = t.version()
+        with open(os.path.join(t.root, "metrics", f"batch-v{v}.json")) as f:
+            reported = json.load(f)["manifest_bytes_written"]
+        assert reported == new, (v, reported, new)
+        assert _raw_manifest(t, v)["metrics"]["manifest_bytes_written"] == new
+
+    check(lambda: replay(
+        spark,
+        _events(spark, [(n + 1, "U", "r", "p003", "cz", "py", "v2",
+                         "2024-01-02 00:00:00", None, None)]),
+        t, batch_size=10,
+    ))
+    check(lambda: compact(spark, t, max_files_per_bucket=0, target_file_rows=20))
+    check(lambda: t.rollback(1))
+
+
 def test_rollback_writes_no_new_shards(spark, tmp_path):
     t, n = _mk(spark, tmp_path / "lake")
     v1 = t.version()
